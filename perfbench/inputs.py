@@ -29,12 +29,13 @@ import pyarrow.parquet as pq
 # "toy" is what the smoke test runs.
 SCALES = {
     "full": {
-        "bulk_events": 160_000,
+        "bulk_events": 1_000_000,
         "bulk_batches": 4,
-        # the skew-probe gate is a file-size threshold; the bulk batch
-        # files (~1.2 MB) are lowered past it so the probe and the
-        # salted-reduce decision run without a multi-GB change log
-        "bulk_probe_min_bytes": 1 << 19,
+        # the skew-probe gate is a file-size threshold (64 MiB); the
+        # ~7 MB bulk batch files pass a 4 MiB gate, so the probe and the
+        # salted-reduce decision run, while the small tail file of
+        # duplicate deliveries stays below it
+        "bulk_probe_min_bytes": 4 << 20,
         "trickle_batch": 2_000,
         "trickle_batches": 40,
         "sf": 0.02,

@@ -36,7 +36,9 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CORES = 4
 # end-to-end metrics (trace 0) and per-layer metrics (trace 1) that the
-# last output line carries; BENCHMARK.json lists the same names
+# last output line carries; BENCHMARK.json lists the same names. Every
+# workload reports each of them, so PER_LAYER holds the layer metrics
+# that have a source on both workloads.
 END_TO_END = {
     "setup_s": "s",
     "ingest_events_per_s": "events/s",
@@ -50,9 +52,6 @@ PER_LAYER = {
     "pipeline.apply_ms_sum": "ms",
     "pipeline.apply_driver_ms": "ms",
     "pipeline.spark_jobs_per_batch": "jobs/batch",
-    "pipeline.skew_probe_calls": "count",
-    "pipeline.salted_batches": "count",
-    "pipeline.dead_lettered": "count",
     "cleaning.kernel_rows_per_s": "rows/s",
     "cleaning.python_rows": "count",
     "minilake.merge_ms": "ms",
@@ -64,18 +63,27 @@ PER_LAYER = {
     "minilake.max_delta_chain": "files",
     "minilake.files_total": "count",
     "minilake.bytes_written_per_event": "B/event",
-    "minilake.read_fold_skipped_ratio": "ratio",
     "lineage.append_ms": "ms",
     "spark.shuffle_write_bytes_per_event": "B/event",
-    "spark.spill_bytes": "B",
     "spark.merge_task_skew": "ratio",
     "spark.executor_busy_share": "ratio",
-    "minilake.point_read_jobs": "jobs/read",
-    "minilake.files_scanned_per_lookup": "files/read",
-    "queries.spark_jobs": "count",
-    "queries.plan_share": "ratio",
 }
-SETUP_ROUNDS = 3
+# layer metrics with a source on one workload only: printed and written
+# to the trace file. A traced run fails when any metric of PER_LAYER or
+# of its workload's list here has no source.
+WORKLOAD_LAYER = {
+    "bulk_replay": [
+        "pipeline.skew_probe_calls", "pipeline.skew_probe_ms",
+        "minilake.gate_wait_ms", "minilake.final_compact_ms",
+        "queries.spark_jobs", "queries.plan_share",
+    ],
+    "trickle_serve": [
+        "pipeline.dead_lettered", "minilake.maybe_compact_ms",
+        "minilake.read_fold_skipped_ratio", "minilake.point_read_jobs",
+        "minilake.files_scanned_per_lookup",
+    ],
+}
+QUERY_LAYER = ("build_ms", "plan_ms", "exec_ms", "spark_jobs")
 
 
 def log(msg: str) -> None:
@@ -117,7 +125,7 @@ def start_spark(run_dir: str, trace: bool):
     )
 
 
-def warm_round(spark, ctx: dict, i: int) -> float:
+def warm_up(spark, ctx: dict) -> float:
     """Table creation + an untimed warm-up that touches every timed call
     at tiny size: a pipelined two-batch replay, the three lake reads,
     compact and one query. Returns its wall in seconds."""
@@ -127,11 +135,12 @@ def warm_round(spark, ctx: dict, i: int) -> float:
     from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA
     from etl_pipeline_spark.streaming import ingest
 
+    from perfbench.tracing import NullTracer
     from perfbench.workloads import run_query
 
     t0 = time.perf_counter()
     table = MiniLakeTable.create(
-        spark, os.path.join(ctx["run_dir"], f"warm{i}"), TRANSCRIPT_SCHEMA,
+        spark, os.path.join(ctx["run_dir"], "warm"), TRANSCRIPT_SCHEMA,
         key_cols=["conv_id", "turn_idx"], n_buckets=4, write_mode="mor",
     )
     ingest.replay_files(spark, ctx["warm_clog"], table, pipeline_depth=2)
@@ -139,7 +148,7 @@ def warm_round(spark, ctx: dict, i: int) -> float:
     table.read(columns=["role"]).groupBy("role").agg(F.count(F.lit(1))).collect()
     table.read_changes_since(1).count()
     table.compact(drop_tombstones=False)
-    run_query(spark, "q1_pricing_summary", ctx["warm_tables"])
+    run_query(spark, "q1_pricing_summary", ctx["warm_tables"], NullTracer())
     return time.perf_counter() - t0
 
 
@@ -267,10 +276,10 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
 
     t0 = time.perf_counter()
     spark = start_spark(run_dir, bool(args.trace))
-    tracer = None
+    tracer = tracing.NullTracer()
     try:
-        setups = [time.perf_counter() - t0 + warm_round(spark, ctx, 0)]
-        setups += [warm_round(spark, ctx, i) for i in range(1, SETUP_ROUNDS)]
+        setup = {"session_s": time.perf_counter() - t0,
+                 "warm_up_s": warm_up(spark, ctx)}
         if args.trace:
             tracer = tracing.Tracer(spark, args.workload)
             tracer.install()
@@ -288,7 +297,7 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
             failed += 1
             errors.append(f"{type(e).__name__}: {e}")
         finally:
-            if tracer is not None:
+            if tracer.enabled:
                 tracer.uninstall()
         loop_s = time.perf_counter() - t_loop
         peak_rss = rss_mb(spark)
@@ -302,7 +311,7 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
             failed += len(bad)
             errors += bad
             log(f"correctness gate {time.perf_counter() - t0:.2f} s (untimed)")
-        if tracer is not None and table is not None:
+        if tracer.enabled and table is not None:
             extra = {
                 "cleaning_kernel_rows_per_s": cleaning_kernel_rows_per_s(),
                 "files_total": parquet_files(table.root),
@@ -318,18 +327,17 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
     finally:
         stop_spark(spark)
 
-    ok = not errors
     e2e = None
     layer: dict = {}
-    if ok:
+    if not errors:
         e2e = {
-            "setup_s": statistics.median(setups),
+            "setup_s": setup["session_s"] + setup["warm_up_s"],
             "ingest_events_per_s": workloads.ingest_events_per_s(rec, ctx["clog"]),
             "read_geomean_ms": workloads.read_geomean_ms(rec),
             "lake_bytes_per_row": dir_bytes(table.root) / max(live_rows, 1),
         }
-        report(rec, e2e, setups, peak_rss, failed, attempted, loop_s)
-        if tracer is not None:
+        report(rec, e2e, setup, peak_rss, failed, attempted, loop_s)
+        if tracer.enabled:
             ev = tracing.parse_event_log(
                 tracing.find_event_log(os.path.join(run_dir, "eventlog"))
             )
@@ -340,21 +348,32 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
                 events_applied=per_events, lineage_records=lineage, extra=extra,
             )
             report_trace(args, work, layer, attribution, tracer, e2e)
-    else:
-        for e in errors[:20]:
-            log(f"FAILED {e}")
+            missing = [k for k in expected_layer(args.workload) if k not in layer]
+            failed += len(missing)
+            errors += [f"layer metric {k} has no source" for k in missing]
+    for e in errors[:20]:
+        log(f"FAILED {e}")
 
-    if args.trace:
-        metrics = {k: {"value": float(layer.get(k, 0.0)), "unit": u}
-                   for k, u in PER_LAYER.items()}
-    else:
-        metrics = {k: {"value": float(e2e[k]) if ok else 0.0, "unit": u}
-                   for k, u in END_TO_END.items()}
+    ok = not errors
+    values, units = (layer, PER_LAYER) if args.trace else (e2e or {}, END_TO_END)
+    metrics = {k: {"value": float(values[k]), "unit": u}
+               for k, u in units.items() if k in values}
     save_result(work, args, {"e2e": e2e, "layer": layer})
     return {
         "correct": ok, "attempted": max(attempted, 1), "failed": failed,
         "metrics": metrics,
     }
+
+
+def expected_layer(workload: str) -> list[str]:
+    """Every layer metric a traced run of ``workload`` must report."""
+    import bench
+
+    names = list(PER_LAYER) + WORKLOAD_LAYER[workload]
+    if workload == "bulk_replay":
+        names += [f"queries.{q}.{m}" for q in bench.BENCH_QUERIES
+                  for m in QUERY_LAYER]
+    return names
 
 
 def gate(ctx: dict, rec: dict, table) -> tuple[list[str], int]:
@@ -396,14 +415,15 @@ def _ms(xs: list[float]) -> list[float]:
     return [x * 1000.0 for x in xs]
 
 
-def report(rec: dict, e2e: dict, setups: list[float], peak_rss: float,
+def report(rec: dict, e2e: dict, setup: dict, peak_rss: float,
            failed: int, attempted: int, loop_s: float) -> None:
     """Print every named end-to-end metric with its unit."""
     from perfbench.workloads import percentile_tail
 
     for k, u in END_TO_END.items():
         log(f"{k} = {e2e[k]:.6g} {u}")
-    log(f"setup rounds = {[round(s, 3) for s in setups]} s (median is setup_s)")
+    log(f"setup_s = session start {setup['session_s']:.3f} s + table creation "
+        f"and warm-up {setup['warm_up_s']:.3f} s (one cold set-up)")
     log(f"peak_rss_mb = {peak_rss:.6g} MB (driver JVM + Python high-water; "
         "not gated: JVM heap growth varies between runs)")
     log(f"failed_ops_ratio = {failed / max(attempted, 1):.6g} ratio "
@@ -467,8 +487,8 @@ def report_trace(args, work: str, layer: dict, attribution: dict,
                     e2e["read_geomean_ms"] / base["read_geomean_ms"] - 1.0,
             }
         for k, v in overhead.items():
-            log(f"tracing overhead on {k}: {100.0 * v:+.1f}% slower than "
-                "the untraced run of this seed")
+            log(f"tracing overhead on {k}: {100.0 * v:+.1f}% against the "
+                "untraced run of this seed (> 0: the traced run was slower)")
     else:
         log("tracing overhead: run the same workload and seed with --trace 0 "
             "first to report it")

@@ -29,7 +29,21 @@ from contextlib import contextmanager
 LABEL_KEY = "spark.job.description"
 
 
+class NullTracer:
+    """The untraced run's stand-in: a span is a null context manager, so
+    the workloads time every call the same way in both runs."""
+
+    enabled = False
+
+    @contextmanager
+    def span(self, name: str, trace_id: str | None = None,
+             label: str | None = None, **attrs):
+        yield {"attrs": {}}
+
+
 class Tracer:
+    enabled = True
+
     def __init__(self, spark, workload: str):
         self.sc = spark.sparkContext
         self.workload = workload
@@ -362,20 +376,31 @@ def find_event_log(log_dir: str) -> list[str]:
 # ---------------------------------------------------- per-layer metrics
 
 
-def _p50(xs: list[float]) -> float:
-    return statistics.median(xs) if xs else 0.0
+def _p50(xs: list[float]) -> float | None:
+    return statistics.median(xs) if xs else None
+
+
+def _ratio(num: float, den: float) -> float | None:
+    return num / den if den else None
 
 
 def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
                   events_applied: int, lineage_records: list[dict],
                   extra: dict) -> tuple[dict, dict]:
     """Per-layer metrics (name → value) and the attribution report that
-    reconciles each ``apply_batch`` wall with its layers' self times."""
+    reconciles each ``apply_batch`` wall with its layers' self times.
+
+    A metric whose source is absent (no span of its kind, no labelled
+    job, no task) is left out rather than reported as 0, so the caller
+    can tell a broken wrapper or event-log parse from a measured zero."""
     spans = tracer.spans
     by_name: dict[str, list[dict]] = {}
     for sp in spans:
         by_name.setdefault(sp["name"], []).append(sp)
     dur = lambda sp: (sp["end"] - sp["start"]) * 1000.0  # noqa: E731
+    total = lambda name: (  # noqa: E731
+        sum(dur(s) for s in by_name[name]) if name in by_name else None
+    )
     selfs = self_times(spans)
     jobs = ev["jobs"]
     prefix = f"bench:{tracer.workload}:"
@@ -395,7 +420,7 @@ def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
     replays = by_name.get("ingest.replay_files", [])
     merges = by_name.get("minilake.merge", [])
     n_batches = len(applies)
-    m: dict[str, float] = {}
+    m: dict[str, float | None] = {}
 
     # ingest: replay wall not covered by applies or drain compactions
     gaps = []
@@ -407,44 +432,49 @@ def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
                 and s["parent"] == r["id"])
         ]
         gaps.append(dur(r) - union_ms(inner))
-    m["ingest.driver_gap_ms"] = sum(gaps)
-    m["ingest.batches"] = n_batches
+    m["ingest.driver_gap_ms"] = sum(gaps) if gaps else None
+    m["ingest.batches"] = n_batches or None
 
     # pipeline
     apply_ms = [dur(a) for a in applies]
     m["pipeline.apply_ms_p50"] = _p50(apply_ms)
-    m["pipeline.apply_ms_sum"] = sum(apply_ms)
+    m["pipeline.apply_ms_sum"] = sum(apply_ms) if apply_ms else None
     driver_ms, jobs_per = [], []
     for a in applies:
         js = apply_jobs_of(a)
         jobs_per.append(len(js))
         driver_ms.append(dur(a) - union_ms([(j["start"], j["end"]) for j in js]))
-    m["pipeline.apply_driver_ms"] = _p50(driver_ms)
+    labelled = sum(jobs_per) > 0  # else the job labels did not reach the log
+    m["pipeline.apply_driver_ms"] = _p50(driver_ms) if labelled else None
     m["pipeline.spark_jobs_per_batch"] = (
-        sum(jobs_per) / n_batches if n_batches else 0.0
+        sum(jobs_per) / n_batches if labelled else None
     )
     probes = by_name.get("pipeline.skew_probe", [])
-    m["pipeline.skew_probe_calls"] = len(probes)
-    m["pipeline.skew_probe_ms"] = sum(dur(p) for p in probes)
+    m["pipeline.skew_probe_calls"] = len(probes) or None
+    m["pipeline.skew_probe_ms"] = total("pipeline.skew_probe")
     applied = [r for r in lineage_records if not r.get("skipped_fenced")]
-    m["pipeline.salted_batches"] = sum(bool(r.get("salted_reduce")) for r in applied)
-    m["pipeline.dead_lettered"] = sum(int(r.get("dead_lettered") or 0) for r in applied)
+    if applied:
+        m["pipeline.salted_batches"] = sum(
+            bool(r.get("salted_reduce")) for r in applied
+        )
+        m["pipeline.dead_lettered"] = sum(
+            int(r.get("dead_lettered") or 0) for r in applied
+        )
 
     # event-log numbers count only the jobs this workload's spans labelled
-    # (the set-up rounds before the loop run unlabelled)
+    # (the set-up before the loop runs unlabelled)
     bench_jobs = [j for j in jobs.values() if j["desc"].startswith(prefix)]
     bench_stages = {s for j in bench_jobs for s in j["stages"]}
 
     # cleaning
-    m["cleaning.kernel_rows_per_s"] = extra.get("cleaning_kernel_rows_per_s", 0.0)
+    m["cleaning.kernel_rows_per_s"] = extra.get("cleaning_kernel_rows_per_s")
     m["cleaning.python_rows"] = sum(
         v for s, v in ev["arrow_rows"].items() if s in bench_stages
-    )
+    ) or None
 
     # minilake: merge, gate, commit tail
     m["minilake.merge_ms"] = _p50([dur(s) for s in merges])
-    gates = by_name.get("minilake.gate_wait", [])
-    m["minilake.gate_wait_ms"] = sum(dur(g) for g in gates)
+    m["minilake.gate_wait_ms"] = total("minilake.gate_wait")
     commit_ms = []
     for s in merges:
         js = [j["end"] for a in applies
@@ -456,36 +486,31 @@ def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
     m["minilake.commit_ms"] = _p50(commit_ms)
     reads = tracer.counters.get("minilake.manifest_reads", 0.0)
     per_batch = [a["attrs"].get("manifest_reads", 0) for a in applies]
-    m["minilake.manifest_reads_per_batch"] = (
-        sum(per_batch) / n_batches if n_batches else 0.0
+    m["minilake.manifest_reads_per_batch"] = _ratio(sum(per_batch), n_batches)
+    m["minilake.manifest_ms"] = (
+        tracer.counters["minilake.manifest_s"] * 1000.0 if reads else None
     )
-    m["minilake.manifest_ms"] = tracer.counters.get("minilake.manifest_s", 0.0) * 1000.0
-    m["minilake.manifest_bytes"] = (
-        tracer.counters.get("minilake.manifest_bytes_read", 0.0) / reads
-        if reads else 0.0
+    m["minilake.manifest_bytes"] = _ratio(
+        tracer.counters.get("minilake.manifest_bytes_read", 0.0), reads
     )
-    mc = by_name.get("minilake.maybe_compact", [])
-    m["minilake.maybe_compact_ms"] = sum(dur(s) for s in mc)
-    m["minilake.folds"] = len(by_name.get("minilake.compact", []))
-    m["minilake.final_compact_ms"] = sum(
-        dur(s) for s in by_name.get("bench.final_compact", [])
+    m["minilake.maybe_compact_ms"] = total("minilake.maybe_compact")
+    m["minilake.folds"] = len(by_name.get("minilake.compact", [])) or None
+    m["minilake.final_compact_ms"] = total("bench.final_compact")
+    m["minilake.max_delta_chain"] = tracer.counters.get("minilake.max_delta_chain")
+    m["minilake.files_total"] = extra.get("files_total")
+    m["minilake.bytes_written_per_event"] = _ratio(
+        extra.get("bytes_written", 0), events_applied
     )
-    m["minilake.max_delta_chain"] = tracer.counters.get("minilake.max_delta_chain", 0)
-    m["minilake.files_total"] = extra.get("files_total", 0)
-    m["minilake.bytes_written_per_event"] = (
-        extra.get("bytes_written", 0) / events_applied if events_applied else 0.0
-    )
-    n_reads = tracer.counters.get("minilake.reads", 0.0)
-    m["minilake.read_fold_skipped_ratio"] = (
-        tracer.counters.get("minilake.reads_fold_skipped", 0.0) / n_reads
-        if n_reads else 0.0
+    m["minilake.read_fold_skipped_ratio"] = _ratio(
+        tracer.counters.get("minilake.reads_fold_skipped", 0.0),
+        tracer.counters.get("minilake.reads", 0.0),
     )
     lookups = by_name.get("bench.point_read", [])
-    m["minilake.point_read_jobs"] = (
-        sum(len(jobs_with(f"point_read:{s['attrs']['round']}")) for s in lookups)
-        / len(lookups) if lookups else 0.0
+    lookup_jobs = sum(
+        len(jobs_with(f"point_read:{s['attrs']['round']}")) for s in lookups
     )
-    m["minilake.files_scanned_per_lookup"] = extra.get("files_per_lookup", 0.0)
+    m["minilake.point_read_jobs"] = _ratio(lookup_jobs, len(lookups)) or None
+    m["minilake.files_scanned_per_lookup"] = extra.get("files_per_lookup")
 
     # lineage
     m["lineage.append_ms"] = _p50([dur(s) for s in by_name.get("lineage.append", [])])
@@ -494,12 +519,13 @@ def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
     apply_jobs = [j for j in jobs.values()
                   if j["desc"].startswith(prefix + "apply:")]
     apply_stages = [s for j in apply_jobs for s in j["stages"]]
+    apply_tasks = [t for s in apply_stages for t in ev["tasks"].get(s, [])]
     all_tasks = [t for s in bench_stages for t in ev["tasks"].get(s, [])]
-    m["spark.shuffle_write_bytes_per_event"] = (
-        sum(t["shuffle_write"] for s in apply_stages for t in ev["tasks"].get(s, []))
-        / events_applied if events_applied else 0.0
-    )
-    m["spark.spill_bytes"] = sum(t["spill"] for t in all_tasks)
+    if apply_tasks:
+        m["spark.shuffle_write_bytes_per_event"] = _ratio(
+            sum(t["shuffle_write"] for t in apply_tasks), events_applied
+        )
+        m["spark.spill_bytes"] = sum(t["spill"] for t in all_tasks)
     skews = []
     for s in apply_stages:
         ts = ev["tasks"].get(s, [])
@@ -507,10 +533,9 @@ def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
             med = statistics.median(t["ms"] for t in ts)
             skews.append(max(t["ms"] for t in ts) / med if med > 0 else 1.0)
     m["spark.merge_task_skew"] = _p50(skews)
-    m["spark.executor_busy_share"] = (
-        sum(t["run_ms"] for t in all_tasks) / (wall_s * 1000.0 * cores)
-        if wall_s > 0 else 0.0
-    )
+    m["spark.executor_busy_share"] = _ratio(
+        sum(t["run_ms"] for t in all_tasks), wall_s * 1000.0 * cores
+    ) or None
 
     # queries: the split per query, plus two totals
     qs = by_name.get("bench.query", [])
@@ -519,13 +544,15 @@ def layer_metrics(tracer: Tracer, ev: dict, *, cores: int, wall_s: float,
         m[f"queries.{name}.build_ms"] = q["attrs"]["build_ms"]
         m[f"queries.{name}.plan_ms"] = q["attrs"]["plan_ms"]
         m[f"queries.{name}.exec_ms"] = q["attrs"]["exec_ms"]
-        m[f"queries.{name}.spark_jobs"] = len(jobs_with(f"query:{name}"))
-    m["queries.spark_jobs"] = sum(
-        1 for j in jobs.values() if j["desc"].startswith(prefix + "query:")
-    )
-    plan = sum(q["attrs"]["plan_ms"] for q in qs)
-    execute = sum(q["attrs"]["exec_ms"] for q in qs)
-    m["queries.plan_share"] = plan / (plan + execute) if qs else 0.0
+        m[f"queries.{name}.spark_jobs"] = len(jobs_with(f"query:{name}")) or None
+    if qs:
+        m["queries.spark_jobs"] = sum(
+            1 for j in jobs.values() if j["desc"].startswith(prefix + "query:")
+        ) or None
+        plan = sum(q["attrs"]["plan_ms"] for q in qs)
+        execute = sum(q["attrs"]["exec_ms"] for q in qs)
+        m["queries.plan_share"] = _ratio(plan, plan + execute)
+    m = {k: v for k, v in m.items() if v is not None}
 
     # attribution: each apply_batch wall vs the self times of its subtree
     per_layer_self: dict[str, float] = {}

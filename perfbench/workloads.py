@@ -4,15 +4,16 @@
     The ``bench.py`` shape: replay a seeded change log through
     ``streaming.ingest.replay_files`` (pipeline depth 2, MOR table, 32
     buckets) and fold it with ``compact(drop_tombstones=False)``, into a
-    fresh table each time, until the run's time is up; then run the 12
-    ``bench.BENCH_QUERIES`` once over the seeded analytics tables, each
-    fully evaluated and collected.
+    fresh table each time, while another fits in the run's time; then
+    run the 12 ``bench.BENCH_QUERIES`` once over the seeded analytics
+    tables, each fully evaluated and collected.
 
 ``trickle_serve``
     Many small batches, each applied by ``replay_files(start_batch=k,
     stop_after=1)``; after each commit one round of reads runs: point
     lookups on seeded ``conv_id`` values, a projected aggregate scan and
-    the change-feed tail since the previous version.
+    the change-feed tail since the previous version. Rounds run in whole
+    fold cycles.
 
 Every call is timed with ``time.perf_counter`` around the public API;
 results stay in the returned record for the correctness gate, which
@@ -41,7 +42,7 @@ def _table(spark, root: str, schema, n_buckets: int):
     )
 
 
-def run_query(spark, name: str, tables: str, tracer=None):
+def run_query(spark, name: str, tables: str, tracer):
     """One analytics query, fully evaluated and collected to the driver
     with ``toPandas``; returns (wall seconds, result frame). The frame is
     what the correctness gate compares with DuckDB afterwards, so the
@@ -51,7 +52,7 @@ def run_query(spark, name: str, tables: str, tracer=None):
     planning)."""
     from etl_pipeline_spark.queries import QUERIES
 
-    if tracer is None:
+    if not tracer.enabled:
         t0 = time.perf_counter()
         out = QUERIES[name](spark, tables).toPandas()
         return time.perf_counter() - t0, out
@@ -78,9 +79,11 @@ def run_query(spark, name: str, tables: str, tracer=None):
     return t3 - t0, out
 
 
-def bulk_replay(spark, ctx: dict, deadline: float, tracer=None) -> dict:
-    """Replay + final compact into a fresh table, repeated until the
-    deadline, then one pass of the 12 analytics queries."""
+def bulk_replay(spark, ctx: dict, deadline: float, tracer) -> dict:
+    """Replay + final compact into a fresh table, repeated while one
+    more fits before the deadline (an iteration is about as long as a
+    whole run's window, so running past it would double the run), then
+    one pass of the 12 analytics queries."""
     from etl_pipeline_spark.pipeline import ApplyConfig
     from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA
     from etl_pipeline_spark.streaming import ingest
@@ -90,21 +93,19 @@ def bulk_replay(spark, ctx: dict, deadline: float, tracer=None) -> dict:
     cfg = ApplyConfig(skew_probe_min_bytes=ctx["scale"]["bulk_probe_min_bytes"])
     rec = {"replay_s": [], "compact_s": [], "queries": {}, "results": {},
            "tables": []}
-    it = 0
-    while it == 0 or time.perf_counter() < deadline:
+    it, last = 0, 0.0
+    while it == 0 or time.perf_counter() + last < deadline:
         root = os.path.join(ctx["run_dir"], f"bulk{it}")
         table = _table(spark, root, TRANSCRIPT_SCHEMA, 32)
         t0 = time.perf_counter()
         ingest.replay_files(spark, ctx["clog"], table, cfg=cfg, pipeline_depth=2)
         t1 = time.perf_counter()
-        if tracer is None:
+        with tracer.span("bench.final_compact", trace_id=f"compact:{it}",
+                         label=f"final_compact:{it}"):
             table.compact(drop_tombstones=False)
-        else:
-            with tracer.span("bench.final_compact", trace_id=f"compact:{it}",
-                             label=f"final_compact:{it}"):
-                table.compact(drop_tombstones=False)
         rec["replay_s"].append(t1 - t0)
         rec["compact_s"].append(time.perf_counter() - t1)
+        last = time.perf_counter() - t0
         rec["tables"].append(table)
         it += 1
     for name in bench.BENCH_QUERIES:
@@ -122,7 +123,9 @@ def point_keys(seed: int, n_conversations: int) -> list[str]:
     return [f"conv-{int(i):06d}" for i in picks]
 
 
-def trickle_serve(spark, ctx: dict, deadline: float, tracer=None) -> dict:
+def trickle_serve(spark, ctx: dict, deadline: float, tracer) -> dict:
+    """Rounds of one commit and its reads, in whole fold cycles, repeated
+    while one more cycle fits before the deadline (at least one)."""
     from pyspark.sql import functions as F
 
     from etl_pipeline_spark.pipeline import ApplyConfig
@@ -135,24 +138,22 @@ def trickle_serve(spark, ctx: dict, deadline: float, tracer=None) -> dict:
                    TRANSCRIPT_SCHEMA_V0, 8)
     keys = ctx["point_keys"]
     # every batch touches all 8 buckets, so maybe_compact folds every
-    # fifth commit and a short run still crosses whole fold cycles
+    # fifth commit. A run measures whole cycles of five rounds: every run
+    # then holds the same mix of folding and plain commits, and of reads
+    # before and after a fold, whatever its speed.
     cfg = ApplyConfig(auto_compact_max_files=4)
+    cycle = cfg.auto_compact_max_files + 1
     rec = {"commit_s": [], "point_s": [], "scan_s": [], "feed_s": [],
            "point_rows": None, "tables": [table]}
 
     def timed(name: str, k: int, fn):
-        if tracer is None:
-            t0 = time.perf_counter()
-            out = fn()
-            return out, time.perf_counter() - t0
         with tracer.span(f"bench.{name}", trace_id=f"round:{k}",
                          label=f"{name}:{k}", round=k):
             t0 = time.perf_counter()
             out = fn()
             return out, time.perf_counter() - t0
 
-    k = 0
-    while (k == 0 or time.perf_counter() < deadline) and k < n_batches:
+    def one_round(k: int) -> None:
         prev = table.current_version()
         _, dt = timed("commit", k, lambda: ingest.replay_files(
             spark, ctx["clog"], table, cfg=cfg, start_batch=k, stop_after=1))
@@ -167,7 +168,16 @@ def trickle_serve(spark, ctx: dict, deadline: float, tracer=None) -> dict:
         rec["scan_s"].append(dt)
         _, dt = timed("feed_read", k, lambda: table.read_changes_since(prev).count())
         rec["feed_s"].append(dt)
-        k += 1
+
+    k, last = 0, 0.0
+    while k + cycle <= n_batches and (
+        k == 0 or time.perf_counter() + last < deadline
+    ):
+        t0 = time.perf_counter()
+        for _ in range(cycle):
+            one_round(k)
+            k += 1
+        last = time.perf_counter() - t0
     rec["batches"] = k
     rec["ops"] = 4 * k
     return rec
@@ -177,12 +187,12 @@ WORKLOADS = {"bulk_replay": bulk_replay, "trickle_serve": trickle_serve}
 
 
 def read_geomean_ms(rec: dict) -> float:
-    """Geometric mean latency of the workload's read calls: of the median
-    point, scan and feed read of trickle_serve, or of the 12 analytics
-    queries of bulk_replay."""
+    """Geometric mean latency of the workload's read calls: of the mean
+    point, scan and feed read over trickle_serve's whole fold cycles, or
+    of the 12 analytics queries of bulk_replay."""
     if "point_s" in rec:
-        meds = [float(np.median(rec[k])) for k in ("point_s", "scan_s", "feed_s")]
-        return _geomean(meds) * 1000.0
+        means = [float(np.mean(rec[k])) for k in ("point_s", "scan_s", "feed_s")]
+        return _geomean(means) * 1000.0
     return _geomean(list(rec["queries"].values())) * 1000.0
 
 
@@ -196,9 +206,11 @@ def changelog_events(clog: str, n_batches: int | None = None) -> int:
 
 
 def ingest_events_per_s(rec: dict, clog: str) -> float:
+    """Events applied per second of commit (or replay + fold) wall: over
+    all of trickle_serve's commits, folds included, or over the median
+    bulk_replay iteration."""
     if "commit_s" in rec:
-        per_batch = changelog_events(clog, rec["batches"]) / rec["batches"]
-        return per_batch / float(np.median(rec["commit_s"]))
+        return changelog_events(clog, rec["batches"]) / sum(rec["commit_s"])
     walls = [r + c for r, c in zip(rec["replay_s"], rec["compact_s"])]
     return changelog_events(clog) / float(np.median(walls))
 
