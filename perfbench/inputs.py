@@ -15,6 +15,7 @@ its ``_DONE`` marker exists.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -29,13 +30,13 @@ import pyarrow.parquet as pq
 # "toy" is what the smoke test runs.
 SCALES = {
     "full": {
-        "bulk_events": 1_000_000,
+        "bulk_events": 600_000,
         "bulk_batches": 4,
         # the skew-probe gate is a file-size threshold (64 MiB); the
-        # ~7 MB bulk batch files pass a 4 MiB gate, so the probe and the
+        # ~4 MB bulk batch files pass a 2 MiB gate, so the probe and the
         # salted-reduce decision run, while the small tail file of
         # duplicate deliveries stays below it
-        "bulk_probe_min_bytes": 4 << 20,
+        "bulk_probe_min_bytes": 2 << 20,
         "trickle_batch": 2_000,
         "trickle_batches": 40,
         "sf": 0.02,
@@ -91,7 +92,7 @@ def trickle_gen_config(seed: int, scale: dict):
         shuffle_window=100,
         dup_delivery_rate=0.01,
         dead_letter_rate=0.01,
-        evolution_batch=3,
+        evolution_batch=8,
     )
 
 
@@ -157,8 +158,11 @@ def ensure_changelog(cache: str, name: str, cfg) -> tuple[str, float]:
     generating, 0.0 on a cache hit)."""
     from etl_pipeline_spark.sources.genlog import write_changelog
 
+    # the whole config is in the key, so a changed generator setting
+    # never reuses a stale log
+    key = hashlib.sha1(repr(cfg).encode()).hexdigest()[:10]
     path = os.path.join(
-        cache, f"{name}-s{cfg.seed}-n{cfg.n_events}-b{cfg.batch_size}"
+        cache, f"{name}-s{cfg.seed}-n{cfg.n_events}-b{cfg.batch_size}-{key}"
     )
     if _done(path):
         return path, 0.0

@@ -125,30 +125,38 @@ def start_spark(run_dir: str, trace: bool):
     )
 
 
-def warm_up(spark, ctx: dict) -> float:
-    """Table creation + an untimed warm-up that touches every timed call
-    at tiny size: a pipelined two-batch replay, the three lake reads,
-    compact and one query. Returns its wall in seconds."""
-    from pyspark.sql import functions as F
+# The query bench.py warms up with, plus the two whose first run in a JVM
+# costs 1.5-1.9 s more than a warm run (the document dedup operators);
+# for each of the other nine the first run costs under 0.4 s more.
+WARM_QUERIES = ["q1_pricing_summary", "docs_exact_dedup", "docs_minhash_near_dups"]
 
-    from etl_pipeline_spark.lake.minilake import MiniLakeTable
-    from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA
+
+def warm_up(spark, ctx: dict, workload: str) -> float:
+    """Table creation + an untimed warm-up of the calls the workload
+    times: for ``bulk_replay`` a one-batch replay, compact and the
+    ``WARM_QUERIES``, all at tiny size; for ``trickle_serve`` the first
+    ``WARM_ROUNDS`` rounds of the run's own change log, on the table the
+    run then measures (``ctx["trickle_table"]``), and one tiny query.
+    Returns its wall in seconds."""
     from etl_pipeline_spark.streaming import ingest
 
+    from perfbench import workloads
     from perfbench.tracing import NullTracer
-    from perfbench.workloads import run_query
 
     t0 = time.perf_counter()
-    table = MiniLakeTable.create(
-        spark, os.path.join(ctx["run_dir"], "warm"), TRANSCRIPT_SCHEMA,
-        key_cols=["conv_id", "turn_idx"], n_buckets=4, write_mode="mor",
-    )
-    ingest.replay_files(spark, ctx["warm_clog"], table, pipeline_depth=2)
-    table.read_for_keys(["conv-000001"]).collect()
-    table.read(columns=["role"]).groupBy("role").agg(F.count(F.lit(1))).collect()
-    table.read_changes_since(1).count()
-    table.compact(drop_tombstones=False)
-    run_query(spark, "q1_pricing_summary", ctx["warm_tables"], NullTracer())
+    if workload == "bulk_replay":
+        table = workloads.bulk_table(spark, os.path.join(ctx["run_dir"], "warm"))
+        ingest.replay_files(spark, ctx["warm_clog"], table, stop_after=1)
+        table.compact(drop_tombstones=False)
+        queries = WARM_QUERIES
+    else:
+        ctx["trickle_table"] = workloads.trickle_table(
+            spark, os.path.join(ctx["run_dir"], "trickle"))
+        workloads.trickle_rounds(spark, ctx, ctx["trickle_table"], 0,
+                                 workloads.WARM_ROUNDS, NullTracer())
+        queries = ["q1_pricing_summary"]
+    for name in queries:
+        workloads.run_query(spark, name, ctx["warm_tables"], NullTracer())
     return time.perf_counter() - t0
 
 
@@ -279,7 +287,7 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
     tracer = tracing.NullTracer()
     try:
         setup = {"session_s": time.perf_counter() - t0,
-                 "warm_up_s": warm_up(spark, ctx)}
+                 "warm_up_s": warm_up(spark, ctx, args.workload)}
         if args.trace:
             tracer = tracing.Tracer(spark, args.workload)
             tracer.install()
@@ -289,7 +297,7 @@ def run(args, work: str, cache: str, run_dir: str) -> dict:
         t_loop = time.perf_counter()
         try:
             rec = workloads.WORKLOADS[args.workload](
-                spark, ctx, t_loop + args.seconds, tracer
+                spark, ctx, args.seconds, tracer
             )
             attempted += rec["ops"]
         except Exception as e:  # a raised op fails the run, reported below
@@ -418,7 +426,7 @@ def _ms(xs: list[float]) -> list[float]:
 def report(rec: dict, e2e: dict, setup: dict, peak_rss: float,
            failed: int, attempted: int, loop_s: float) -> None:
     """Print every named end-to-end metric with its unit."""
-    from perfbench.workloads import percentile_tail
+    from perfbench.workloads import CYCLE, WARM_ROUNDS, percentile_tail
 
     for k, u in END_TO_END.items():
         log(f"{k} = {e2e[k]:.6g} {u}")
@@ -450,7 +458,8 @@ def report(rec: dict, e2e: dict, setup: dict, peak_rss: float,
                      if val is not None else
                      f"; {name}_tail_ms needs 11+ samples (n={n})")
         log(line)
-    log(f"commit rounds = {rec['batches']}")
+    log(f"commit rounds = {len(rec['commit_s'])} measured in fold cycles of "
+        f"{CYCLE} (the last one folding), after {WARM_ROUNDS} warm-up rounds")
 
 
 def report_trace(args, work: str, layer: dict, attribution: dict,

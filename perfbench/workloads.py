@@ -4,9 +4,8 @@
     The ``bench.py`` shape: replay a seeded change log through
     ``streaming.ingest.replay_files`` (pipeline depth 2, MOR table, 32
     buckets) and fold it with ``compact(drop_tombstones=False)``, into a
-    fresh table each time, while another fits in the run's time; then
-    run the 12 ``bench.BENCH_QUERIES`` once over the seeded analytics
-    tables, each fully evaluated and collected.
+    fresh table each time; then run the 12 ``bench.BENCH_QUERIES`` once
+    over the seeded analytics tables, each fully evaluated and collected.
 
 ``trickle_serve``
     Many small batches, each applied by ``replay_files(start_batch=k,
@@ -14,6 +13,9 @@
     lookups on seeded ``conv_id`` values, a projected aggregate scan and
     the change-feed tail since the previous version. Rounds run in whole
     fold cycles.
+
+A run does a fixed amount of work for a given ``--seconds``: the number
+of replays or fold cycles that fill it at their nominal wall.
 
 Every call is timed with ``time.perf_counter`` around the public API;
 results stay in the returned record for the correctness gate, which
@@ -79,13 +81,31 @@ def run_query(spark, name: str, tables: str, tracer):
     return t3 - t0, out
 
 
-def bulk_replay(spark, ctx: dict, deadline: float, tracer) -> dict:
-    """Replay + final compact into a fresh table, repeated while one
-    more fits before the deadline (an iteration is about as long as a
-    whole run's window, so running past it would double the run), then
-    one pass of the 12 analytics queries."""
-    from etl_pipeline_spark.pipeline import ApplyConfig
+# Nominal wall of one measured unit on four cores: a bulk replay + fold
+# and a trickle fold cycle of three rounds. A run does the number
+# of units that fills ``--seconds`` at these walls (at least one), so
+# every run of a given ``--seconds`` does the same work whatever the
+# host's speed, and lake_bytes_per_row, which grows with the rounds
+# applied, is the same kind of table in every run.
+NOMINAL_REPLAY_S = 16.0
+NOMINAL_CYCLE_S = 7.5
+
+
+def units(seconds: float, nominal_s: float) -> int:
+    return max(1, int(seconds // nominal_s))
+
+
+def bulk_table(spark, root: str):
     from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA
+
+    return _table(spark, root, TRANSCRIPT_SCHEMA, 32)
+
+
+def bulk_replay(spark, ctx: dict, seconds: float, tracer) -> dict:
+    """Replay + final compact into a fresh table, as many times as fill
+    ``seconds`` at the nominal wall, then one pass of the 12 analytics
+    queries."""
+    from etl_pipeline_spark.pipeline import ApplyConfig
     from etl_pipeline_spark.streaming import ingest
 
     import bench
@@ -93,10 +113,9 @@ def bulk_replay(spark, ctx: dict, deadline: float, tracer) -> dict:
     cfg = ApplyConfig(skew_probe_min_bytes=ctx["scale"]["bulk_probe_min_bytes"])
     rec = {"replay_s": [], "compact_s": [], "queries": {}, "results": {},
            "tables": []}
-    it, last = 0, 0.0
-    while it == 0 or time.perf_counter() + last < deadline:
-        root = os.path.join(ctx["run_dir"], f"bulk{it}")
-        table = _table(spark, root, TRANSCRIPT_SCHEMA, 32)
+    n = units(seconds, NOMINAL_REPLAY_S)
+    for it in range(n):
+        table = bulk_table(spark, os.path.join(ctx["run_dir"], f"bulk{it}"))
         t0 = time.perf_counter()
         ingest.replay_files(spark, ctx["clog"], table, cfg=cfg, pipeline_depth=2)
         t1 = time.perf_counter()
@@ -105,14 +124,12 @@ def bulk_replay(spark, ctx: dict, deadline: float, tracer) -> dict:
             table.compact(drop_tombstones=False)
         rec["replay_s"].append(t1 - t0)
         rec["compact_s"].append(time.perf_counter() - t1)
-        last = time.perf_counter() - t0
         rec["tables"].append(table)
-        it += 1
     for name in bench.BENCH_QUERIES:
         rec["queries"][name], rec["results"][name] = run_query(
             spark, name, ctx["tables"], tracer
         )
-    rec["ops"] = 2 * it + len(bench.BENCH_QUERIES)
+    rec["ops"] = 2 * n + len(bench.BENCH_QUERIES)
     return rec
 
 
@@ -123,28 +140,40 @@ def point_keys(seed: int, n_conversations: int) -> list[str]:
     return [f"conv-{int(i):06d}" for i in picks]
 
 
-def trickle_serve(spark, ctx: dict, deadline: float, tracer) -> dict:
-    """Rounds of one commit and its reads, in whole fold cycles, repeated
-    while one more cycle fits before the deadline (at least one)."""
+# Every trickle batch touches all 8 buckets, and maybe_compact folds a
+# bucket once its chain holds more than TRICKLE_MAX_FILES files: the
+# fourth commit into a new table folds, and from then on every third.
+# The warm-up applies the first WARM_ROUNDS rounds (two fold cycles) to
+# the table the run measures: the first round pays the JVM's first-use
+# cost (about 13 s), and the rounds after it keep getting faster until
+# about the seventh, by a fifth. The measured rounds then come in whole
+# fold cycles of CYCLE rounds, the last one folding.
+TRICKLE_BUCKETS = 8
+TRICKLE_MAX_FILES = 3
+CYCLE = TRICKLE_MAX_FILES
+WARM_ROUNDS = 1 + 2 * CYCLE
+
+
+def trickle_table(spark, root: str):
+    from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA_V0
+
+    return _table(spark, root, TRANSCRIPT_SCHEMA_V0, TRICKLE_BUCKETS)
+
+
+def trickle_rounds(spark, ctx: dict, table, start: int, n: int, tracer) -> dict:
+    """Rounds ``start`` .. ``start + n - 1``: each applies batch k by
+    ``replay_files(start_batch=k, stop_after=1)`` and then reads the
+    seeded point keys, a projected aggregate and the change-feed tail
+    since the version before the commit."""
     from pyspark.sql import functions as F
 
     from etl_pipeline_spark.pipeline import ApplyConfig
-    from etl_pipeline_spark.schema import TRANSCRIPT_SCHEMA_V0
-    from etl_pipeline_spark.sources.changelog import list_batch_files
     from etl_pipeline_spark.streaming import ingest
 
-    n_batches = len(list_batch_files(ctx["clog"]))
-    table = _table(spark, os.path.join(ctx["run_dir"], "trickle"),
-                   TRANSCRIPT_SCHEMA_V0, 8)
     keys = ctx["point_keys"]
-    # every batch touches all 8 buckets, so maybe_compact folds every
-    # fifth commit. A run measures whole cycles of five rounds: every run
-    # then holds the same mix of folding and plain commits, and of reads
-    # before and after a fold, whatever its speed.
-    cfg = ApplyConfig(auto_compact_max_files=4)
-    cycle = cfg.auto_compact_max_files + 1
+    cfg = ApplyConfig(auto_compact_max_files=TRICKLE_MAX_FILES)
     rec = {"commit_s": [], "point_s": [], "scan_s": [], "feed_s": [],
-           "point_rows": None, "tables": [table]}
+           "point_rows": None}
 
     def timed(name: str, k: int, fn):
         with tracer.span(f"bench.{name}", trace_id=f"round:{k}",
@@ -153,7 +182,7 @@ def trickle_serve(spark, ctx: dict, deadline: float, tracer) -> dict:
             out = fn()
             return out, time.perf_counter() - t0
 
-    def one_round(k: int) -> None:
+    for k in range(start, start + n):
         prev = table.current_version()
         _, dt = timed("commit", k, lambda: ingest.replay_files(
             spark, ctx["clog"], table, cfg=cfg, start_batch=k, stop_after=1))
@@ -168,18 +197,24 @@ def trickle_serve(spark, ctx: dict, deadline: float, tracer) -> dict:
         rec["scan_s"].append(dt)
         _, dt = timed("feed_read", k, lambda: table.read_changes_since(prev).count())
         rec["feed_s"].append(dt)
+    return rec
 
-    k, last = 0, 0.0
-    while k + cycle <= n_batches and (
-        k == 0 or time.perf_counter() + last < deadline
-    ):
-        t0 = time.perf_counter()
-        for _ in range(cycle):
-            one_round(k)
-            k += 1
-        last = time.perf_counter() - t0
-    rec["batches"] = k
-    rec["ops"] = 4 * k
+
+def trickle_serve(spark, ctx: dict, seconds: float, tracer) -> dict:
+    """Whole fold cycles of rounds on the table the warm-up began
+    (``ctx["trickle_table"]``), as many as fill ``seconds`` at the
+    nominal wall and the change log holds (at least one). Whole cycles
+    give every run the same mix of folding and plain commits, and of
+    reads before and after a fold."""
+    from etl_pipeline_spark.sources.changelog import list_batch_files
+
+    n_files = len(list_batch_files(ctx["clog"]))
+    cycles = min(units(seconds, NOMINAL_CYCLE_S), (n_files - WARM_ROUNDS) // CYCLE)
+    table = ctx["trickle_table"]
+    rec = trickle_rounds(spark, ctx, table, WARM_ROUNDS, cycles * CYCLE, tracer)
+    rec["tables"] = [table]
+    rec["batches"] = WARM_ROUNDS + cycles * CYCLE  # applied, warm-up included
+    rec["ops"] = 4 * cycles * CYCLE
     return rec
 
 
@@ -187,12 +222,12 @@ WORKLOADS = {"bulk_replay": bulk_replay, "trickle_serve": trickle_serve}
 
 
 def read_geomean_ms(rec: dict) -> float:
-    """Geometric mean latency of the workload's read calls: of the mean
-    point, scan and feed read over trickle_serve's whole fold cycles, or
-    of the 12 analytics queries of bulk_replay."""
+    """Geometric mean latency of the workload's read calls: of the
+    median point, scan and feed read over trickle_serve's whole fold
+    cycles, or of the 12 analytics queries of bulk_replay."""
     if "point_s" in rec:
-        means = [float(np.mean(rec[k])) for k in ("point_s", "scan_s", "feed_s")]
-        return _geomean(means) * 1000.0
+        meds = [float(np.median(rec[k])) for k in ("point_s", "scan_s", "feed_s")]
+        return _geomean(meds) * 1000.0
     return _geomean(list(rec["queries"].values())) * 1000.0
 
 
@@ -205,12 +240,26 @@ def changelog_events(clog: str, n_batches: int | None = None) -> int:
     return sum(pq.ParquetFile(p).metadata.num_rows for p in files)
 
 
+def typical_cycle_s(commit_s: list[float]) -> float:
+    """Commit wall of a typical measured fold cycle: the median plain
+    commit times the plain commits of a cycle, plus the median folding
+    commit (the last of each cycle). Medians keep a commit that a burst
+    of host load slowed from moving the whole figure."""
+    plain = [x for i, x in enumerate(commit_s) if i % CYCLE != CYCLE - 1]
+    fold = commit_s[CYCLE - 1::CYCLE]
+    return (CYCLE - 1) * float(np.median(plain)) + float(np.median(fold))
+
+
 def ingest_events_per_s(rec: dict, clog: str) -> float:
-    """Events applied per second of commit (or replay + fold) wall: over
-    all of trickle_serve's commits, folds included, or over the median
+    """Events applied per second of commit (or replay + fold) wall: the
+    mean events of a trickle_serve fold cycle over its typical commit
+    wall (folds included), or the change log's events over the median
     bulk_replay iteration."""
     if "commit_s" in rec:
-        return changelog_events(clog, rec["batches"]) / sum(rec["commit_s"])
+        measured = len(rec["commit_s"])
+        events = (changelog_events(clog, rec["batches"])
+                  - changelog_events(clog, rec["batches"] - measured))
+        return events / (measured // CYCLE) / typical_cycle_s(rec["commit_s"])
     walls = [r + c for r, c in zip(rec["replay_s"], rec["compact_s"])]
     return changelog_events(clog) / float(np.median(walls))
 
